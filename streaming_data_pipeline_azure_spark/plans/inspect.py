@@ -58,18 +58,6 @@ def unpartitioned_window_count(df: DataFrame) -> int:
     return count
 
 
-def assert_broadcast_join(df: DataFrame) -> None:
-    plan = physical_plan(df)
-    assert "BroadcastHashJoin" in plan, f"expected broadcast join:\n{plan}"
-
-
-def assert_pushed_filter(df: DataFrame, fragment: str) -> None:
-    plan = physical_plan(df)
-    assert "PushedFilters" in plan and fragment in plan, (
-        f"expected pushed filter containing {fragment!r}:\n{plan}"
-    )
-
-
 def scan_output_rows(df: DataFrame) -> int:
     """Execute ``df`` and return the summed ``numOutputRows`` of every
     file-source scan in the FINAL executed plan — the rows that

@@ -238,11 +238,3 @@ class ParquetUpsertSink:
         self._write_generation(spark, nxt)
         self._gens.commit(spark, nxt)
         self._gens.gc_below(spark, keep=nxt)
-
-
-def write_parquet_append(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
-    """Plain append sink for batch outputs."""
-    writer = df.write.mode("append")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)

@@ -135,9 +135,9 @@ def build_dedup_ingest_query(
     """Streaming corpus ingestion with incremental NEAR-dup dedup — the
     production shape the persisted index exists for:
 
-        doc stream ── foreachBatch ── index.filter_novel(batch)
+        doc stream ── foreachBatch ── index.filter_novel_and_fold(batch)
                                         ├── append survivors to parquet
-                                        └── index.append(survivors)
+                                        └── fold(survivors) into the index
 
     Each micro-batch probes the :class:`~streaming_data_pipeline_azure_
     spark.operators.dedup.MinHashCorpusIndex` (corpus text never
@@ -146,7 +146,11 @@ def build_dedup_ingest_query(
     later batches dedup against everything already ingested — including
     paraphrased re-sends across micro-batches, which the watermarked
     exact-key streaming dedup (:func:`streaming.windows.dedup_within_
-    watermark`) cannot catch.
+    watermark`) cannot catch. The defaults sign each batch once
+    (:meth:`~streaming_data_pipeline_azure_spark.operators.dedup.
+    MinHashCorpusIndex.filter_novel_and_fold`): the probe and the
+    fold-in share the batch's persisted signature tables, and the
+    fold-in is a by-id semi-join of them, not a second signing.
 
     The survivors are materialized once (``localCheckpoint``) because
     they feed two writes, and BOTH writes are replay-idempotent: the
@@ -162,22 +166,31 @@ def build_dedup_ingest_query(
 
     Defaults drive a :class:`MinHashCorpusIndex` over ``text_col``; for
     any other index shape (e.g. :class:`IvfIndex` over an embedding
-    column) pass ``filter_fn``/``append_fn`` overrides. ``compact_every``
-    runs the index's crash-safe ``compact()`` after every N accepted
-    batches, bounding the small-file accumulation of a long-running
-    ingest (each append is one task-set of files)."""
+    column) pass ``filter_fn``/``append_fn`` overrides (with either one
+    set, the default side runs the index's public ``filter_novel`` or
+    ``append``, which signs on its own). A :class:`MinHashCorpusIndex`
+    append rebalances before its write, so AQE sizes its files (one per
+    table for a small batch); ``compact_every`` runs the index's crash-safe ``compact()`` after
+    every N accepted batches, bounding the file count a long-running
+    ingest still accumulates (one set of files per accepted batch)."""
     from streaming_data_pipeline_azure_spark.functions.cache import (
         release_caches,
     )
 
-    probe = filter_fn or (
-        lambda b: index.filter_novel(b, text_col, dedup_within=dedup_within)
-    )
-    fold = append_fn or (lambda acc: index.append(acc, text_col))
+    def probe_and_fold(b: DataFrame):
+        if filter_fn is None and append_fn is None:
+            return index.filter_novel_and_fold(
+                b, text_col, dedup_within=dedup_within
+            )
+        novel = (filter_fn(b) if filter_fn else
+                 index.filter_novel(b, text_col, dedup_within=dedup_within))
+        return novel, append_fn or (lambda acc: index.append(acc, text_col))
+
     state = {"accepted_batches": 0}
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        survivors = probe(batch_df).localCheckpoint()
+        novel, fold = probe_and_fold(batch_df)
+        survivors = novel.localCheckpoint()
         if survivors.isEmpty():
             release_caches()
             return

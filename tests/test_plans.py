@@ -211,6 +211,82 @@ def test_incremental_neardup_probe_reads_only_index(spark, tmp_path):
     assert "SortMergeJoin" not in plan, plan
 
 
+def _plan_nodes(plan) -> list:
+    """Every node of a physical plan, descending through AQE stages and
+    into each cached relation's plan ONCE — the plan string repeats a
+    cached relation's lineage at every reference, so counting scans in
+    it overcounts. A reused exchange is not descended into: its subtree
+    ran once, where it was first used."""
+    seen, out = set(), []
+
+    def visit(node) -> None:
+        name = node.getClass().getSimpleName()
+        out.append(node)
+        if name == "AdaptiveSparkPlanExec":
+            visit(node.executedPlan())
+        elif "QueryStageExec" in name:
+            visit(node.plan())
+        elif name == "InMemoryTableScanExec":
+            builder = node.relation().cacheBuilder()
+            if builder.hashCode() not in seen:
+                seen.add(builder.hashCode())
+                visit(builder.cachedPlan())
+        elif name != "ReusedExchangeExec":
+            ch = node.children()
+            for i in range(ch.size()):
+                visit(ch.apply(i))
+
+    visit(plan)
+    return out
+
+
+def test_filter_novel_probes_corpus_once(spark, tmp_path):
+    """filter_novel with the within-batch pass runs the corpus probe
+    ONCE: its loser ids are persisted and read by both the within-batch
+    pass and the final anti-join, so the executed plan scans the index's
+    bands/ and shingles/ tables once each, and the final anti-join is
+    planned as a broadcast of the batch-bounded loser ids, never a
+    sort-merge join."""
+    from streaming_data_pipeline_azure_spark.functions.cache import (
+        release_caches,
+    )
+    from streaming_data_pipeline_azure_spark.operators import dedup
+
+    docs = [(i, f"corpus document number {i} about topic {i % 7} with shared words")
+            for i in range(40)]
+    idx = dedup.MinHashCorpusIndex(str(tmp_path / "idx"), "doc_id", threshold=0.5)
+    idx.build(spark.createDataFrame(docs, ["doc_id", "text"]), "text")
+    fresh = "a brand new article describing spark physical plans in careful detail"
+    batch = spark.createDataFrame(
+        [(100 + i, f"new crawl delta doc {i} with some shared words") for i in range(5)]
+        + [(200, docs[3][1]),                   # corpus re-send
+           (300, fresh), (301, fresh + " today")],  # within-batch near-dup
+        ["doc_id", "text"],
+    )
+    out = idx.filter_novel(batch, "text", dedup_within=True)
+    assert 300 in {r["doc_id"] for r in out.collect()}
+    executed = out._jdf.queryExecution().executedPlan()
+    final, initial = _plan_nodes(executed), _plan_nodes(executed.initialPlan())
+    release_caches()
+    roots = [
+        str(n.relation().location().rootPaths().head())
+        for n in final if n.getClass().getSimpleName() == "FileSourceScanExec"
+    ]
+    assert sum(r.endswith("/bands") for r in roots) == 1, roots
+    assert sum(r.endswith("/shingles") for r in roots) == 1, roots
+    names = {n.getClass().getSimpleName() for n in final}
+    assert "SortMergeJoinExec" not in names, names
+    # planned as a broadcast, not left to AQE's runtime demotion (the
+    # within-batch verify joins may still plan as sort-merge: AQE sizes
+    # those from the batch)
+    anti_smj = [
+        n.simpleString(100) for n in initial
+        if n.getClass().getSimpleName() == "SortMergeJoinExec"
+        and str(n.joinType()) == "LeftAnti"
+    ]
+    assert not anti_smj, anti_smj
+
+
 def test_gram_index_scrub_reads_only_index(spark, tmp_path):
     """GramCorpusIndex.scrub (r5): the corpus participates ONLY through
     its persisted gram-hash set — every parquet scan in the probe plan

@@ -595,6 +595,92 @@ def test_streaming_ingest_dedups_across_microbatches(spark, tmp_path):
     assert idx.stats(spark)["n_docs"] == 3
 
 
+def test_streaming_ingest_sign_once_fold_matches_public_api(spark, tmp_path):
+    """The default ingest signs each batch once and folds its survivors
+    in as a by-id semi-join of the batch's signed tables. It must accept
+    the same docs and leave the same index rows, in the same column
+    order, as an ingest whose hooks call the public filter_novel and
+    append (which sign the survivors again) — and each of its appends
+    adds one AQE-sized file per table."""
+    import time
+
+    import pyarrow.parquet as pq
+
+    from streaming_data_pipeline_azure_spark.operators.dedup import (
+        MinHashCorpusIndex,
+    )
+    from streaming_data_pipeline_azure_spark.streaming.pipeline import (
+        build_dedup_ingest_query,
+        run_to_completion,
+    )
+
+    base = "the quick brown fox jumps over the lazy dog and runs far away today"
+    doc_a = "a fresh article describing spark physical plans in careful detail"
+    doc_b = "totally unrelated text about cooking pasta with garlic and olive oil"
+    doc_c = "notes on tuning parquet row groups for selective columnar scans"
+    doc_d = "a field guide to migratory birds of the northern coastal marshes"
+    batches = [
+        [(10, base.replace("lazy", "sleepy")),  # corpus paraphrase
+         (11, doc_a),                           # novel
+         (12, doc_c), (13, doc_c + " again")],  # near-dup pair in one batch
+        [(20, doc_a + " indeed"),               # paraphrase across batches
+         (21, doc_b)],                          # novel
+        [(30, doc_b),                           # exact re-send
+         (31, doc_d)],                          # novel
+    ]
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    for k, rows in enumerate(batches):
+        if k:
+            time.sleep(1.1)  # distinct mtimes: file source orders by mtime
+        (in_dir / f"{k}.json").write_text("\n".join(
+            json.dumps({"doc_id": i, "text": t}) for i, t in rows))
+    stream = (
+        spark.readStream.schema("doc_id long, text string")
+        .option("maxFilesPerTrigger", 1)
+        .json(str(in_dir))
+    )
+
+    def ingest(name, hooks):
+        idx = MinHashCorpusIndex(str(tmp_path / name), "doc_id", threshold=0.5)
+        idx.build(spark.createDataFrame([(1, base)], ["doc_id", "text"]), "text")
+        before = idx.stats(spark)
+        accepted = str(tmp_path / f"{name}_accepted")
+        run_to_completion(build_dedup_ingest_query(
+            stream, idx, accepted, str(tmp_path / f"{name}_ckpt"),
+            trigger_available_now=True, **hooks(idx),
+        ))
+        ids = {r["doc_id"] for r in spark.read.parquet(accepted).collect()}
+        return idx, before, ids
+
+    fused, before, fused_ids = ingest("fused", lambda idx: {})
+    public, _, public_ids = ingest("public", lambda idx: {
+        "filter_fn": lambda b: idx.filter_novel(b, "text"),
+        "append_fn": lambda acc: idx.append(acc, "text"),
+    })
+    assert fused_ids == public_ids == {11, 12, 21, 31}
+
+    for table in ("bands", "shingles"):
+        got, want = (
+            spark.read.parquet(f"{idx.path}/gen=0/{table}")
+            for idx in (fused, public)
+        )
+        assert got.columns == want.columns
+        # positional rows; a shingle set's array order is not part of it
+        rows = [
+            sorted(tuple(sorted(v) if isinstance(v, list) else v for v in r)
+                   for r in df.collect())
+            for df in (got, want)
+        ]
+        assert rows[0] == rows[1], table
+        for f in got.inputFiles():  # no appended file may reorder columns
+            assert pq.read_schema(f.removeprefix("file:")).names == want.columns
+
+    after = fused.stats(spark)
+    assert after["n_band_files"] == before["n_band_files"] + len(batches)
+    assert after["n_shingle_files"] == before["n_shingle_files"] + len(batches)
+
+
 def test_streaming_ingest_accepted_write_is_replay_idempotent(spark, tmp_path):
     """Crash window (ADVICE r4): the accepted parquet was written but the
     crash hit before the index fold-in, so the replayed batch recomputes
