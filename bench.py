@@ -31,8 +31,8 @@ def force(df) -> None:
 def bench_streaming(spark, sf_dir: str) -> float:
     """End-to-end micro-batch streaming: sf orders as JSON order events
     through file-source -> broadcast enrichment join -> keyed upsert sink,
-    8 micro-batches, availableNow. Returns drain wall-seconds (input
-    materialization excluded)."""
+    4 micro-batches (4 JSON files, one per trigger), availableNow.
+    Returns drain wall-seconds (input materialization excluded)."""
     import shutil
     import tempfile
 

@@ -59,16 +59,3 @@ TESTDATA_TABLES = (
     "embeddings",
 )
 
-
-def load_tables(spark, sf_dir: str, tables: tuple[str, ...] = TESTDATA_TABLES) -> dict:
-    """Load driver testdata parquet tables and register temp views.
-
-    Column pruning + filter pushdown reach the parquet scan because these are
-    plain declarative reads — no caching, no collect.
-    """
-    out = {}
-    for name in tables:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

@@ -10,14 +10,14 @@ ASA replays duplicate documents (at-least-once). We do strictly better
 Local/test implementation is a log-structured keyed store on parquet,
 organized into **generations**:
 
-- the live log is ``<dir>/gen=G/batch_id=N/...``; each micro-batch writes
-  ``batch_id=N`` with dynamic overwrite, so a replayed batch N
-  **overwrites itself** — idempotent without a transaction log;
-- readers resolve the latest version per key with a max_by on batch_id —
-  dedup-on-read, the same model Delta/Hudi MOR tables use;
-- data inside each batch is partitioned by the upsert key's hash bucket so
-  a 1000-executor writer lays out files in parallel with no driver
-  involvement;
+- the live log is ``<dir>/gen=G/batch_id=N/...``; each micro-batch is
+  one map-only job that overwrites its own ``batch_id=N`` directory, so
+  a replayed batch N **overwrites itself** — idempotent without a
+  transaction log, and no shuffle on the write path;
+- readers resolve the latest version per key — dedup-on-read, the same
+  model Delta/Hudi MOR tables use. A key repeated inside one batch is
+  resolved there too, so every read, :meth:`ParquetUpsertSink.read_as_of`
+  and :meth:`ParquetUpsertSink.compact` pick the same row;
 - ``compact()`` garbage-collects shadowed versions by writing the
   survivors to generation G+1 and atomically committing it with a
   ``_COMMITTED`` marker file (a single filesystem create), then deleting
@@ -67,31 +67,29 @@ class ParquetUpsertSink:
     # -- write / read ------------------------------------------------------
 
     def write_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.dropDuplicates([self.key])  # within-batch upsert
-            .withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            # per-write, NOT session conf: a session-global dynamic mode
-            # would silently change any later static partitioned overwrite
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.log_path(batch_df.sparkSession))
-        )
+        """Write micro-batch ``batch_id`` as one map-only job into its own
+        ``batch_id=N`` directory, replacing whatever a previous attempt
+        of the same batch left there. Keys repeated inside the batch are
+        all written; :meth:`_resolved` picks one on read.
+
+        Every column must be orderable (no map columns): the read-side
+        resolution takes the greatest row per key."""
+        path = f"{self.log_path(batch_df.sparkSession)}/batch_id={int(batch_id)}"
+        batch_df.write.mode("overwrite").parquet(path)
 
     def foreach_batch(self):
         """The callable handed to ``writeStream.foreachBatch``."""
         return self.write_batch
 
     def _resolved(self, df: DataFrame) -> DataFrame:
-        """Latest version per key (highest batch_id wins), batch_id kept."""
+        """Latest version per key, batch_id kept: the greatest
+        ``(batch_id, *other columns)``, so the highest batch wins and a
+        key repeated inside one batch resolves to the same row on every
+        read."""
         others = [c for c in df.columns if c not in (self.key, "batch_id")]
         return (
             df.groupBy(self.key)
-            .agg(
-                F.max_by(
-                    F.struct("batch_id", *others), F.col("batch_id")
-                ).alias("v")
-            )
+            .agg(F.max(F.struct("batch_id", *others)).alias("v"))
             .select(
                 self.key,
                 F.col("v.batch_id").alias("batch_id"),
@@ -211,10 +209,11 @@ class ParquetUpsertSink:
 
     def _write_generation(self, spark, gen: int) -> None:
         """Stage the survivors of the live generation into ``gen=<gen>``
-        (uncommitted — invisible to readers until :meth:`_commit`).
+        (uncommitted — invisible to readers until ``GenerationalDir.commit``).
 
-        Survivors keep their ORIGINAL batch_id partitions: a replayed
-        micro-batch N rewrites its own partition wholesale, and any key
+        Survivors are the rows :meth:`read` returns, one per key, and
+        keep their ORIGINAL ``batch_id=N`` directories: a replayed
+        micro-batch N rewrites its own directory wholesale, and any key
         it re-delivers stale is still shadowed by the higher batch_id of
         the surviving row elsewhere — replay idempotence survives
         compaction. Reading the old directory while writing the new one
@@ -230,10 +229,11 @@ class ParquetUpsertSink:
 
     def compact(self, spark) -> None:
         """Garbage-collect shadowed versions: survivors → generation G+1,
-        marker-commit, GC older generations. Caps the read-side
-        ``max_by`` cost (the full-log scan a real sink table wouldn't
-        pay) without a transaction log; crash-safe per the module
-        docstring."""
+        marker-commit, GC older generations. Afterwards the log holds one
+        row per key — within-batch repeats and older batches' versions
+        are gone — which caps the read-side resolution cost (the
+        full-log scan a real sink table wouldn't pay) without a
+        transaction log; crash-safe per the module docstring."""
         nxt = self.current_gen(spark) + 1
         self._write_generation(spark, nxt)
         self._gens.commit(spark, nxt)

@@ -1159,3 +1159,35 @@ def test_unpartitioned_window_audit_all_entries(spark, sf_dir):
         "docstring with 'window: grain-bounded — <reason>' after "
         f"verifying the window input is grain-bounded): {offenders}"
     )
+
+
+def test_sink_write_batch_is_one_map_only_job(spark, tmp_path):
+    """An upsert-sink micro-batch is one map-only job: every job the
+    write issues has a single stage and no stage writes shuffle bytes.
+    Keys repeat inside the batch, so a within-batch dedup on the write
+    path (a shuffle-map stage first) would show here."""
+    from streaming_data_pipeline_azure_spark.sources.sinks import (
+        ParquetUpsertSink,
+    )
+
+    batch = spark.range(0, 400, 1, numPartitions=4).select(
+        F.concat(F.lit("k"), (F.col("id") % 100).cast("string")).alias("k"),
+        F.col("id").alias("v"),
+    )
+    sc = spark.sparkContext
+    group = "test_sink_write_batch_is_one_map_only_job"
+    sc.setJobGroup(group, "upsert sink write_batch")
+    try:
+        ParquetUpsertSink(str(tmp_path / "sink"), key="k").write_batch(batch, 0)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    store = sc._jsc.sc().statusStore()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert jobs
+    for job in jobs:
+        stages = tracker.getJobInfo(job).stageIds
+        assert len(stages) == 1, (job, list(stages))
+        for sid in stages:
+            assert store.lastStageAttempt(sid).shuffleWriteBytes() == 0, sid

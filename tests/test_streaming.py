@@ -447,6 +447,101 @@ def test_sink_compaction_is_generational_and_crash_safe(spark, tmp_path):
     # (non-replayable executor state) — the stage is a plain parquet write
 
 
+def test_sink_within_batch_duplicate_resolves_to_one_stable_row(spark, tmp_path):
+    """A key written twice inside one micro-batch is resolved on read to
+    the greatest row, the same one on every read, in read_as_of and in
+    what compact() keeps; a later batch still shadows it, and replaying
+    the batch changes nothing."""
+    sink = ParquetUpsertSink(str(tmp_path / "sink"), key="k")
+    batch0 = spark.createDataFrame(
+        [("a", 1), ("b", 1), ("a", 2)], "k string, v int"
+    )
+
+    def rows(df):
+        return sorted((r["k"], r["v"]) for r in df.collect())
+
+    sink.write_batch(batch0, 0)
+    first = rows(sink.read(spark))
+    assert first == [("a", 2), ("b", 1)]
+    for _ in range(3):
+        assert rows(sink.read(spark)) == first
+    assert rows(sink.read_as_of(spark, 0)) == first
+    sink.write_batch(batch0, 0)  # replay
+    assert rows(sink.read(spark)) == first
+
+    sink.compact(spark)
+    assert rows(sink.read(spark)) == first
+    assert spark.read.parquet(sink.log_path(spark)).count() == 2
+
+    sink.write_batch(spark.createDataFrame([("a", 0)], "k string, v int"), 1)
+    shadowed = [("a", 0), ("b", 1)]
+    assert rows(sink.read(spark)) == shadowed
+    sink.write_batch(batch0, 0)  # replay after a later batch
+    assert rows(sink.read(spark)) == shadowed
+    assert rows(sink.read_as_of(spark, 0)) == first
+
+
+def test_enrichment_crash_before_commit_replays_to_clean_result(
+    spark, tmp_path, customers
+):
+    """Fault injection: the sink writes batch 1 and the query dies before
+    the offset commit. A restart on the same checkpoint replays batch 1
+    into its own directory, and the drained sink equals a clean run (up
+    to the per-write GUID ``id``)."""
+    import os
+
+    src = tmp_path / "orders_in"
+    src.mkdir()
+    files = [
+        [{"orderID": f"o{b}{i}", "customerID": 1 + i % 3, "amount": 10 * b + i}
+         for i in range(4)]
+        for b in range(3)
+    ]
+    files[2].append({"orderID": "o00", "customerID": 2, "amount": 999})  # upsert
+    for b, orders in enumerate(files):
+        f = src / f"f{b}.json"
+        f.write_text("\n".join(json.dumps(o) for o in orders))
+        os.utime(f, (1_700_000_000 + b, 1_700_000_000 + b))  # batch order
+
+    class CrashOnceSink:
+        def __init__(self, sink):
+            self.sink = sink
+            self.crashed = False
+
+        def write_batch(self, batch_df, batch_id):
+            self.sink.write_batch(batch_df, batch_id)
+            if batch_id == 1 and not self.crashed:
+                self.crashed = True
+                raise RuntimeError("injected crash before the offset commit")
+
+    def drain(sink, ckpt):
+        run_to_completion(build_enrichment_query(
+            read_order_file_stream(spark, str(src)), customers, sink,
+            str(tmp_path / ckpt), trigger_available_now=True,
+        ))
+
+    clean = ParquetUpsertSink(str(tmp_path / "clean"))
+    drain(clean, "ckpt_clean")
+    faulty = CrashOnceSink(ParquetUpsertSink(str(tmp_path / "faulty")))
+    with pytest.raises(Exception, match="injected crash"):
+        drain(faulty, "ckpt_faulty")
+    drain(faulty, "ckpt_faulty")  # restart on the same checkpoint
+    sink = faulty.sink
+
+    def visible(s):
+        return sorted(tuple(r) for r in s.read(spark).drop("id").collect())
+
+    assert visible(sink) == visible(clean)
+    out = sink.read(spark)
+    assert out.count() == out.select("order_id").distinct().count() == 12
+    assert {r["purchase_amount"] for r in out.collect()
+            if r["order_id"] == "o00"} == {999}
+    log = sink.log_path(spark)
+    assert sorted(d for d in os.listdir(log) if not d.startswith(("_", "."))) == [
+        "batch_id=0", "batch_id=1", "batch_id=2",
+    ]
+
+
 def test_streaming_sampling_export_matches_batch(spark, tmp_path):
     """VERDICT r4 #8 stream/batch parity for the SAMPLING/export stage:
     temperature mixing + shard assignment produce identical rows whether
